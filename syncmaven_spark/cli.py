@@ -45,12 +45,6 @@ def _build_parser() -> argparse.ArgumentParser:
         "--chunks", type=int, default=8,
         help="checkpoint chunk count for --distributed (default 8)",
     )
-    sync.add_argument(
-        "--cache-input-max-rows", type=int, default=5_000_000,
-        help="persist the validated scan across --distributed chunk jobs "
-        "when the planned row count is at or under this bound "
-        "(default 5000000; 0 always re-scans with pushdown only)",
-    )
     sync.add_argument("--state", help="state dir/file (default <project>/.state)")
     sync.add_argument("--sf-dir", default=None, help="testdata dir to register as views")
     sync.add_argument("-m", "--model-sql", help="ad-hoc: inline model SQL")
@@ -390,7 +384,6 @@ def _main(argv: list[str] | None = None) -> int:
                 result = run_sync_distributed(
                     spark, sync, store,
                     full_refresh=args.full_refresh, num_chunks=args.chunks,
-                    cache_input_max_rows=args.cache_input_max_rows,
                 )
             else:
                 result = run_sync(

@@ -7,11 +7,14 @@ and dropping rows whose enrichment errors. (The reference's package-based
 provider is declared but unreachable — ``sync.ts:108-110`` throws; the
 protocol semantics are what we preserve.)
 
-Two execution paths:
-- driver-side (runner.py parity loop): any ``Enrichment.enrich(row)``,
-- scale path: ``enrich_dataframe`` runs the same enrichment inside
-  ``mapInPandas`` — Arrow-batched, executor-parallel, 1→0..N row expansion
-  via JSON rows so arbitrary schema changes are possible. Top-level
+Two execution paths, each written once in runner.py and shared by every
+sync path (``run_sync``, ``run_sync_distributed``, ``run_streaming_sync``):
+- driver-side (``runner.validate_and_enrich``): any
+  ``Enrichment.enrich(row)``, outputs re-validated per stage,
+- executor-side (``runner.deliver_tagged`` / ``_enrich_distributed``):
+  ``enrich_dataframe`` runs the same enrichment inside ``mapInPandas`` —
+  Arrow-batched, executor-parallel, 1→0..N row expansion via JSON rows so
+  arbitrary schema changes are possible. Top-level
   timestamp/date inputs are revived to datetime/date objects to match the
   parity path's row contract; BinaryType inputs arrive as base64 strings
   here (JSON boundary) vs bytearray on the parity path — enrichments over

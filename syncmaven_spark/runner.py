@@ -14,10 +14,15 @@ iteration with per-checkpoint state commits. Two delivery paths:
   reference semantics (ordered rows, mid-stream checkpoints, monotonicity
   enforcement). Right for API-bound destinations where the sink itself is the
   bottleneck (HubSpot/Intercom rate limits dwarf driver throughput).
-- **scale mode** (``chunk_by_cursor_ranges`` + ``foreachPartition`` sinks):
-  cursor-range chunks planned by one count+percentile aggregate so each chunk is a
+- **scale mode** (``run_sync_distributed``): cursor-range chunks planned by
+  one count+percentile aggregate (``plan_cursor_chunks``) so each chunk is a
   Catalyst-filtered scan committed independently — no global sort, no
   driver materialization; used by distributed sinks (file/scale, http pools).
+
+Every sync path — these two and ``streaming.run_streaming_sync`` — shares
+one stage chain per side: ``validate_and_enrich`` validates, enriches and
+re-validates one row on the driver; ``deliver_tagged`` counts, enriches and
+delivers a ``_valid``-tagged frame executor-side.
 
 At-least-once + idempotency: rows at/after the last checkpointed cursor are
 re-sent on restart (inclusive ``>=`` predicate); sinks dedup via external-id
@@ -28,9 +33,9 @@ from __future__ import annotations
 
 import logging
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Sequence
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from syncmaven_spark.cursor import (
@@ -190,7 +195,6 @@ def run_sync(
     sync: SyncDefinition,
     store: StateStore,
     full_refresh: bool = False,
-    max_rows: int | None = None,
 ) -> SyncResult:
     """Execute one sync end-to-end in parity mode (ordered delivery,
     mid-stream checkpoints) — the reference's exact lifecycle."""
@@ -209,8 +213,6 @@ def run_sync(
     last_cursor = load_cursor(store, sync.id, cursor_col) if cursor_col else None
 
     df = model_dataframe(spark, sync.model, last_cursor)
-    if max_rows is not None:
-        df = df.limit(max_rows)
 
     tracker = CursorTracker(cursor_col) if cursor_col else None
     total_stats = StreamStats()
@@ -325,29 +327,15 @@ def run_sync(
             # invalid ones (sync.ts:566-569 counts totalRows)
             rows_since_checkpoint += 1
 
-            if not validator.is_valid(row):
+            out_rows, dropped = validate_and_enrich(
+                row, validator, sync.enrichments
+            )
+            total_stats.skipped += dropped
+            if out_rows is None:
                 threshold.fail()
                 threshold.check()
                 log.warning("invalid row skipped in sync %s: %s", sync.id, row)
-                total_stats.skipped += 1
                 continue
-
-            out_rows = [row]
-            for enrichment in sync.enrichments:
-                next_rows: list[dict[str, Any]] = []
-                for r in out_rows:
-                    try:
-                        # list() inside the try: a generator raising
-                        # mid-iteration must drop this row, not crash the
-                        # sync (or deliver a partial expansion)
-                        enriched = list(enrichment.enrich(r))
-                    except Exception as e:  # enrichment errors drop the row
-                        log.warning("enrichment error, row dropped: %s", e)
-                        enriched = []
-                    next_rows.extend(
-                        er for er in enriched if validator.is_valid(er)
-                    )
-                out_rows = next_rows
 
             for r in out_rows:
                 if out is None:
@@ -403,6 +391,43 @@ def run_sync(
     )
 
 
+def validate_and_enrich(
+    row: dict[str, Any], validator: RowValidator, enrichments: list[Any]
+) -> tuple[list[dict[str, Any]] | None, int]:
+    """The driver-side stage chain (sync.ts:523-564): validate the source
+    row, then run each enrichment (row → 0..N) and re-validate its outputs
+    before the next stage, so a row one stage invalidates never feeds the
+    next (applyEnrichment, sync.ts:600-607).
+
+    Returns ``(rows, dropped)``: the rows to deliver, and how many rows
+    validation dropped — the source row itself, or enriched outputs that
+    failed re-validation; callers add ``dropped`` to ``stats.skipped``.
+    ``rows`` is None when the source row itself is invalid (it feeds the
+    caller's error threshold). An enrichment that raises drops its input
+    row: logged, not counted, as on the executor-side chain."""
+    if not validator.is_valid(row):
+        return None, 1
+    rows, dropped = [row], 0
+    for enrichment in enrichments:
+        next_rows: list[dict[str, Any]] = []
+        for r in rows:
+            try:
+                # list() inside the try: a generator raising mid-iteration
+                # must drop this row, not crash the sync (or deliver a
+                # partial expansion)
+                enriched = list(enrichment.enrich(r))
+            except Exception as e:  # enrichment errors drop the row
+                log.warning("enrichment error, row dropped: %s", e)
+                continue
+            for er in enriched:
+                if validator.is_valid(er):
+                    next_rows.append(er)
+                else:
+                    dropped += 1
+        rows = next_rows
+    return rows, dropped
+
+
 def _fold_stats(total: StreamStats, part: StreamStats) -> None:
     total.received += part.received
     total.success += part.success
@@ -414,6 +439,13 @@ def _fold_stats(total: StreamStats, part: StreamStats) -> None:
 
 # --- scale path -----------------------------------------------------------
 
+#: planned row count at or under which a multi-chunk distributed sync
+#: persists its validated scan (MEMORY_AND_DISK) across the chunk jobs, so
+#: the N sequential chunk jobs don't each re-decode the row groups the
+#: range predicate can't prune. A 100 TB input exceeds it and keeps the
+#: pure-pushdown re-scan.
+CACHE_INPUT_MAX_ROWS = 5_000_000
+
 
 def run_sync_distributed(
     spark: SparkSession,
@@ -421,17 +453,8 @@ def run_sync_distributed(
     store: StateStore,
     full_refresh: bool = False,
     num_chunks: int = 8,
-    cache_input_max_rows: int = 5_000_000,
 ) -> SyncResult:
     """The 100-TB execution path for one sync.
-
-    ``cache_input_max_rows``: when the chunk planner's row count is at or
-    under this bound (and more than one chunk will run), the validated scan
-    is persisted (MEMORY_AND_DISK) for the duration of the chunk loop so the
-    N sequential chunk jobs don't each re-decode the row groups the range
-    predicate can't prune. Set to 0 to always re-scan (the pure-pushdown
-    behavior a 100 TB input gets regardless, since its row count exceeds
-    any sane bound).
 
     Differences from parity-mode ``run_sync``:
     - **No driver materialization, no global sort.** Checkpoint chunks are
@@ -439,20 +462,23 @@ def run_sync_distributed(
       (``plan_cursor_chunks``);
       each chunk is a Catalyst-filtered scan — the range predicate pushes
       into parquet/JDBC — processed executor-parallel and committed
-      independently.
+      independently. When the planned row count is at or under
+      ``CACHE_INPUT_MAX_ROWS`` and more than one chunk will run, the
+      validated scan is persisted for the duration of the chunk loop.
     - **Vectorized validation.** The JSON-Schema check runs as the
       Arrow-batched ``_valid`` column (validate.py); valid rows flow to the
       sink, counts feed the same 20%/100-row error threshold, evaluated
       between chunk commits.
     - **Executor-side delivery.** The file sink writes partition-parallel
-      NDJSON (``df.write.json`` with ISO-millis); other sinks open one
-      OutputStream per partition via ``foreachPartition`` — appropriate for
-      stateless sinks (http); state-backed sinks (hubspot ID maps) belong on
-      the parity path where the store is driver-local.
+      NDJSON (``df.write.json`` with ISO-millis); other sinks go through
+      ``deliver_tagged`` — one OutputStream per partition via
+      ``foreachPartition``, appropriate for stateless sinks (http);
+      state-backed sinks (hubspot ID maps) belong on the parity path where
+      the store is driver-local.
     - **Executor-side enrichment.** ``sync.enrichments`` run as Arrow-batched
       ``mapInPandas`` row→0..N stages between validation and delivery, with
       enriched outputs re-validated (``_enrich_distributed``) — the parity
-      path's driver-side loop, distributed.
+      path's ``validate_and_enrich``, distributed.
 
     At-least-once contract is unchanged: a crash between chunk write and
     cursor commit re-sends that chunk on restart; sink idempotency
@@ -499,7 +525,6 @@ def run_sync_distributed(
     # through the projection to the scan) — round-3 rebuilt the Arrow-UDF
     # plan for every chunk, paying the py4j construction cost 10×.
     tagged_full = with_validation_column(df, spec.row_type)
-    planned_total: int | None = None
     cached_input: DataFrame | None = None
     if cursor_col:
         ranges, planned_total = plan_cursor_chunks(df, cursor_col, num_chunks)
@@ -515,22 +540,14 @@ def run_sync_distributed(
         # whole sync fits in a handful of row groups. Bonus: all chunks
         # then read ONE snapshot, so a live source changing mid-sync can't
         # make chunk boundaries overlap or gap.
-        if len(ranges) > 1 and planned_total <= cache_input_max_rows:
+        if len(ranges) > 1 and planned_total <= CACHE_INPUT_MAX_ROWS:
             cached_input = tagged_full.persist()
             tagged_full = cached_input
-        chunk_iter = iter(
-            (
-                tagged_full
-                if lo is None and hi is None
-                else tagged_full.filter(
-                    _chunk_predicate(df, cursor_col, lo, hi, i == 0)
-                ),
-                hi,
-            )
-            for i, (lo, hi) in enumerate(ranges)
-        )
+        chunks = _range_chunks(tagged_full, cursor_col, ranges)
+        extra_aggs = [F.max(cursor_col).alias("max_cursor")]
     else:
-        chunk_iter = iter([(tagged_full, None)])
+        chunks = [(tagged_full, None)]
+        extra_aggs = []
 
     out_dir = sync.credentials.get("directory")
     if is_file and not out_dir:
@@ -541,14 +558,7 @@ def run_sync_distributed(
 
     first_chunk = True
     try:
-        for chunk_idx, (tagged, _hi) in enumerate(chunk_iter):
-            agg_cols = [
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.when(F.col("_valid"), 1).otherwise(0)).alias("valid"),
-            ]
-            if cursor_col:
-                agg_cols.append(F.max(cursor_col).alias("max_cursor"))
-
+        for chunk_idx, (tagged, _hi) in enumerate(chunks):
             if is_file:
                 # observe(): the row/validity counts and the cursor max ride the
                 # write action itself — ONE evaluation of the scan + validation
@@ -565,13 +575,14 @@ def run_sync_distributed(
                     # window the observe() comment below covers for counts).
                     continue
                 obs = Observation(f"chunk_{chunk_idx}")
-                tagged = tagged.observe(obs, *agg_cols)
+                tagged = tagged.observe(obs, *_validity_aggs(), *extra_aggs)
                 valid = tagged.filter(F.col("_valid")).drop("_valid")
                 out_obs = None
-                drop_acc = None
+                drop_acc = spark.sparkContext.accumulator(0)
                 if sync.enrichments:
-                    drop_acc = spark.sparkContext.accumulator(0)
-                    valid = _enrich_distributed(valid, sync, spec, drop_acc)
+                    valid = _enrich_distributed(
+                        valid, sync.enrichments, spec.row_type, drop_acc
+                    )
                     # enrichment changes cardinality (row → 0..N): count what
                     # was actually written with a second observation on the
                     # enriched plan, still one job
@@ -586,52 +597,32 @@ def run_sync_distributed(
                     # the append saw zero rows — keep first_chunk/checkpoint
                     # semantics identical to a skipped chunk
                     continue
-                # the distributed write either commits all valid rows or raises
-                written = out_obs.get["n"] if out_obs is not None else n_valid
-                delivered_success, delivered_failed = written, 0
-                # enriched rows the re-validation dropped never reach the file;
-                # without this they vanish from received/success/skipped/failed
-                extra_skipped = drop_acc.value if drop_acc is not None else 0
+                # the distributed write either commits all valid rows or
+                # raises; enriched rows the re-validation dropped never
+                # reach the file — without drop_acc they would vanish from
+                # received/success/skipped/failed
+                chunk_stats = StreamStats(
+                    success=out_obs.get["n"] if out_obs is not None else n_valid,
+                    skipped=(n_total - n_valid) + drop_acc.value,
+                )
             else:
-                # foreachPartition is RDD-backed: observed metrics never reach
-                # the listener (measured — obs.get blocks forever), so this
-                # path pays one persisted pre-count instead; sink-reported stats
-                # ride accumulators back so failed deliveries are not silently
-                # folded into success. With the sync-wide input cache active
-                # the chunk is already a cheap filter over cached partitions —
-                # a second per-chunk persist would double-cache every row.
-                chunk_persisted = cached_input is None
-                if chunk_persisted:
-                    tagged = tagged.persist()
-                sc = spark.sparkContext
-                acc = {k: sc.accumulator(0)
-                       for k in ("received", "success", "skipped", "failed")}
-                drop_acc = sc.accumulator(0)
-                try:
-                    counts = tagged.agg(*agg_cols).first()
-                    n_total, n_valid = counts["total"] or 0, counts["valid"] or 0
-                    if n_total == 0:
-                        continue
-                    valid = tagged.filter(F.col("_valid")).drop("_valid")
-                    if sync.enrichments:
-                        valid = _enrich_distributed(valid, sync, spec, drop_acc)
-                    deliver_partitions(
-                        valid, provider, sync.stream, sync.credentials, sync.id,
-                        sync.options, restart=not first_chunk, stats_acc=acc,
-                    )
-                finally:
-                    if chunk_persisted:
-                        tagged.unpersist()
-                delivered_success = acc["success"].value
-                delivered_failed = acc["failed"].value
-                extra_skipped = acc["skipped"].value + drop_acc.value
+                counts, chunk_stats = deliver_tagged(
+                    tagged, provider, sync.stream, sync.credentials, sync.id,
+                    sync.options, spec.row_type, sync.enrichments,
+                    restart=not first_chunk, extra_aggs=extra_aggs,
+                    # the chunk is already a cheap filter over the sync-wide
+                    # cache — a per-chunk persist would double-cache it
+                    cached=cached_input is not None,
+                )
+                if counts is None:
+                    continue
+                n_total, n_valid = counts["total"], counts["valid"] or 0
 
             threshold.success(n_valid)
             threshold.fail(n_total - n_valid)
-            total_stats.received += n_total
-            total_stats.skipped += (n_total - n_valid) + extra_skipped
-            total_stats.success += delivered_success
-            total_stats.failed += delivered_failed
+            # received = source rows, not rows handed to the sink
+            chunk_stats.received = n_total
+            _fold_stats(total_stats, chunk_stats)
 
             if cursor_col and counts["max_cursor"] is not None:
                 # `is not None`, not truthiness: 0 / 0.0 are valid cursor values
@@ -652,32 +643,94 @@ def run_sync_distributed(
     )
 
 
+def _validity_aggs() -> list[Column]:
+    """Row and valid-row counts of a ``_valid``-tagged frame."""
+    return [
+        F.count(F.lit(1)).alias("total"),
+        F.sum(F.when(F.col("_valid"), 1).otherwise(0)).alias("valid"),
+    ]
+
+
+def deliver_tagged(
+    tagged: DataFrame,
+    provider: DestinationProvider,
+    stream_name: str,
+    credentials: dict[str, Any],
+    sync_id: str,
+    options: dict[str, Any],
+    row_type: dict[str, Any] | None,
+    enrichments: list[Any],
+    restart: bool,
+    extra_aggs: Sequence[Column] = (),
+    cached: bool = False,
+) -> tuple[Row | None, StreamStats]:
+    """The executor-side stage chain: the valid rows of a ``_valid``-tagged
+    frame run the enrichment chain (``_enrich_distributed``) and are
+    delivered by ``deliver_partitions``. Two Spark jobs over one persisted
+    frame (``cached``: the caller already holds it in cache): the count
+    aggregate, plus the caller's ``extra_aggs`` such as the cursor max,
+    then the delivery. foreachPartition is RDD-backed, so observed metrics
+    never reach the listener (measured — ``Observation.get`` blocks
+    forever): hence the separate aggregate, and sink stats and
+    re-validation drops ride accumulators back.
+
+    Returns ``(counts, stats)``: the aggregate row (None for an empty
+    frame — nothing delivered), and ``received``/``success``/``failed`` as
+    the sinks report them, with ``skipped`` covering invalid rows,
+    re-validation drops and sink-side skips.
+    """
+    if not cached:
+        tagged = tagged.persist()
+    sc = tagged.sparkSession.sparkContext
+    acc = {k: sc.accumulator(0)
+           for k in ("received", "success", "skipped", "failed")}
+    drop_acc = sc.accumulator(0)
+    try:
+        counts = tagged.agg(*_validity_aggs(), *extra_aggs).first()
+        if not counts["total"]:
+            return None, StreamStats()
+        valid = tagged.filter(F.col("_valid")).drop("_valid")
+        if enrichments:
+            valid = _enrich_distributed(valid, enrichments, row_type, drop_acc)
+        deliver_partitions(
+            valid, provider, stream_name, credentials, sync_id, options,
+            restart=restart, stats_acc=acc,
+        )
+    finally:
+        if not cached:
+            tagged.unpersist()
+    return counts, StreamStats(
+        received=acc["received"].value,
+        success=acc["success"].value,
+        skipped=(counts["total"] - (counts["valid"] or 0))
+        + acc["skipped"].value + drop_acc.value,
+        failed=acc["failed"].value,
+    )
+
+
 def _enrich_distributed(
-    valid: DataFrame, sync: SyncDefinition, spec, drop_acc=None
+    valid: DataFrame, enrichments: list[Any], row_type, drop_acc
 ) -> DataFrame:
-    """Executor-parallel enrichment chain for the distributed path
+    """Executor-parallel enrichment chain for the distributed paths
     (reference applies enrichments between validation and delivery,
     sync.ts:539-554): each stage is an Arrow-batched ``mapInPandas``
     row→0..N expansion, and outputs are re-validated AFTER EACH STAGE —
-    the reference (applyEnrichment, sync.ts:600-607) and this repo's own
-    parity loop both drop a stage's invalid output before the next stage
-    runs, so a row one stage invalidates never feeds the next.
+    the reference (applyEnrichment, sync.ts:600-607) and the driver-side
+    ``validate_and_enrich`` both drop a stage's invalid output before the
+    next stage runs, so a row one stage invalidates never feeds the next.
 
-    ``drop_acc`` (optional accumulator): counts enriched rows dropped by the
+    ``drop_acc`` (accumulator): counts enriched rows dropped by the
     re-validation so they surface in ``stats.skipped`` — observe() cannot
     report them on RDD-backed ``foreachPartition`` actions, and the file
-    path's write-side observation only sees survivors. Task retries can
-    over-count, the same caveat the delivery accumulators already carry."""
+    path's write-side observation only sees survivors."""
     from syncmaven_spark.enrich import enrich_dataframe
     from syncmaven_spark.validate import with_validation_column
 
-    for enrichment in sync.enrichments:
+    for enrichment in enrichments:
         valid = enrich_dataframe(valid, lambda e=enrichment: e)
-        tagged = with_validation_column(valid, spec.row_type)
-        if drop_acc is None:
-            valid = tagged.filter(F.col("_valid")).drop("_valid")
-        else:
-            valid = _filter_valid_counting(tagged, drop_acc)
+        valid = _filter_valid_counting(
+            with_validation_column(valid, row_type), drop_acc
+        )
     return valid
 
 
@@ -836,14 +889,6 @@ def plan_cursor_chunks(
     return ranges, row["n"]
 
 
-def chunk_by_cursor_ranges(
-    df: DataFrame, cursor_col: str, num_chunks: int
-) -> list[tuple[Any, Any]]:
-    """Boundary-planning half of :func:`plan_cursor_chunks` (kept for
-    callers that only need the ranges)."""
-    return plan_cursor_chunks(df, cursor_col, num_chunks)[0]
-
-
 def _chunk_predicate(df: DataFrame, cursor_col: str, lo, hi, first: bool):
     """NATIVE-typed range predicate for one chunk — pushdown-friendly: the
     raw cursor column compares against literals of its own type."""
@@ -864,6 +909,12 @@ def iter_cursor_chunks(df: DataFrame, cursor_col: str, num_chunks: int):
     """Yield ``(chunk_df, upper_bound)`` in cursor order for per-chunk
     commit. Nulls (the smallest cursor value) ride in the first chunk."""
     ranges, _ = plan_cursor_chunks(df, cursor_col, num_chunks)
+    yield from _range_chunks(df, cursor_col, ranges)
+
+
+def _range_chunks(df: DataFrame, cursor_col: str, ranges):
+    """``(chunk_df, upper_bound)`` per planned range: ``df`` filtered by the
+    range's native-typed predicate (unfiltered for a single open range)."""
     for i, (lo, hi) in enumerate(ranges):
         if lo is None and hi is None:
             yield df, hi

@@ -75,7 +75,7 @@ def run_streaming_sync(
       (``executor_side=True``), raise the cap explicitly, or shrink
       micro-batches (``maxFilesPerTrigger`` on the source).
     """
-    from syncmaven_spark.runner import deliver_partitions
+    from syncmaven_spark.runner import deliver_tagged, validate_and_enrich
     from syncmaven_spark.validate import with_validation_column
 
     provider = (
@@ -96,57 +96,20 @@ def run_streaming_sync(
 
     def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if use_executor:
-            # vectorized validation; one persisted pass feeds the counts
-            # aggregate and the partition-parallel delivery (observe() does
-            # not fire for RDD-backed foreachPartition — see runner.py)
-            tagged = with_validation_column(batch_df, spec.row_type).persist()
-            try:
-                counts = tagged.agg(
-                    F.count(F.lit(1)).alias("total"),
-                    F.sum(F.when(F.col("_valid"), 1).otherwise(0)).alias("valid"),
-                ).first()
-                n_total = counts["total"] or 0
-                n_valid = counts["valid"] or 0
-                if n_total == 0:
-                    return
-                valid = tagged.filter(F.col("_valid")).drop("_valid")
-                sc = spark.sparkContext
-                drop_acc = sc.accumulator(0)
-                if enrichments:
-                    # row → 0..N enrichment stages, executor-parallel, with
-                    # PER-STAGE re-validation — same chain as
-                    # run_sync_distributed (a stage's invalid output never
-                    # feeds the next stage); drops ride drop_acc
-                    from syncmaven_spark.enrich import enrich_dataframe
-                    from syncmaven_spark.runner import _filter_valid_counting
-
-                    for enrichment in enrichments:
-                        valid = enrich_dataframe(
-                            valid, lambda e=enrichment: e
-                        )
-                        valid = _filter_valid_counting(
-                            with_validation_column(valid, spec.row_type),
-                            drop_acc,
-                        )
-                # sink-reported stats ride accumulators back from the
-                # executors, so both delivery paths report the same way:
-                # received = rows handed to sinks, failed = sink failures,
-                # skipped = validation skips (+ sink-side skips)
-                acc = {k: sc.accumulator(0)
-                       for k in ("received", "success", "skipped", "failed")}
-                deliver_partitions(
-                    valid, provider, stream, credentials, sync_id,
-                    options or {}, restart=opened["n"] > 0, stats_acc=acc,
-                )
-            finally:
-                tagged.unpersist()
-            opened["n"] += 1
-            totals["received"] += acc["received"].value
-            totals["success"] += acc["success"].value
-            totals["failed"] += acc["failed"].value
-            totals["skipped"] += (
-                (n_total - n_valid) + acc["skipped"].value + drop_acc.value
+            # vectorized validation, then the batch runner's executor-side
+            # chain (counts, enrichment, partition-parallel delivery)
+            counts, stats = deliver_tagged(
+                with_validation_column(batch_df, spec.row_type),
+                provider, stream, credentials, sync_id, options or {},
+                spec.row_type, enrichments or [], restart=opened["n"] > 0,
             )
+            if counts is None:
+                return
+            opened["n"] += 1
+            # received = rows handed to sinks, failed = sink failures,
+            # skipped = validation skips (+ sink-side skips)
+            for k in totals:
+                totals[k] += getattr(stats, k)
             return
 
         # Bounded driver delivery: LIMIT cap+1 (not collect-then-count) so
@@ -177,40 +140,23 @@ def run_streaming_sync(
         # up-front full-batch list would double peak driver memory and
         # defeat the cap's bound.
         for spark_row in collected:
-            row = spark_row.asDict(recursive=True)
-            if not validator.is_valid(row):
-                totals["skipped"] += 1
-                continue
-            out_rows = [row]
-            for enrichment in enrichments or []:
-                next_rows: list[dict[str, Any]] = []
-                for r in out_rows:
-                    try:
-                        enriched = list(enrichment.enrich(r))
-                    except Exception:
-                        enriched = []  # enrichment errors drop the row
-                    for er in enriched:
-                        if validator.is_valid(er):
-                            next_rows.append(er)
-                        else:
-                            # re-validation drops count as skipped, same as
-                            # pre-enrichment validation failures
-                            totals["skipped"] += 1
-                out_rows = next_rows
-            for r in out_rows:
+            out_rows, dropped = validate_and_enrich(
+                spark_row.asDict(recursive=True), validator, enrichments or []
+            )
+            # invalid rows and re-validation drops count as skipped
+            totals["skipped"] += dropped
+            for r in out_rows or []:
                 try:
                     out.handle_row(r)
                 except RowError:
                     # sink-declared per-row rejection: count failed and
                     # continue (std.ts:147-175); other errors abort
                     totals["failed"] += 1
-        stats = out.finish()
-        totals["received"] += stats.received
-        totals["success"] += stats.success
-        totals["failed"] += stats.failed
         # sink-reported skips (mixpanel lookback/already-processed drops)
-        # fold in like every other delivery path (_fold_stats / acc)
-        totals["skipped"] += stats.skipped
+        # fold in like on every other delivery path
+        stats = out.finish()
+        for k in totals:
+            totals[k] += getattr(stats, k)
 
     query = (
         reader.writeStream.foreachBatch(handle_batch)

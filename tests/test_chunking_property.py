@@ -122,7 +122,7 @@ def test_chunk_predicates_push_down_natively(spark, tmp_path):
 def test_date_cursor_chunking(spark):
     """Date cursors plan real chunks (unix_date domain) — they previously
     crashed at analysis (cannot cast DATE to DOUBLE)."""
-    from syncmaven_spark.runner import chunk_by_cursor_ranges, plan_cursor_chunks
+    from syncmaven_spark.runner import plan_cursor_chunks
 
     df = spark.sql(
         "select date_add(date'2024-01-01', cast(id as int)) as d from range(365)"
@@ -130,7 +130,7 @@ def test_date_cursor_chunking(spark):
     ranges, total = plan_cursor_chunks(df, "d", 4)
     assert total == 365
     assert len(ranges) == 4
-    assert chunk_by_cursor_ranges(df, "d", 1) == [(None, None)]
+    assert plan_cursor_chunks(df, "d", 1)[0] == [(None, None)]
 
 
 @pytest.mark.usefixtures("spark")
@@ -163,8 +163,8 @@ def test_cursor_chunks_partition_rows_exactly(spark, vals, k):
 
 def test_chunk_input_cache_scoped_to_sync(spark, tmp_path):
     """Round-5 perf: the bounded input cache a multi-chunk sync takes out
-    must be released by sync end (success AND failure paths), and
-    cache_input_max_rows=0 must disable it entirely."""
+    must be released by sync end (success AND failure paths), and a
+    single-chunk sync (the uncached path) must leave nothing persisted."""
     from syncmaven_spark.runner import (
         ModelDefinition,
         SyncDefinition,
@@ -196,8 +196,7 @@ def test_chunk_input_cache_scoped_to_sync(spark, tmp_path):
     assert n_cached() == before, "input cache leaked past the sync"
 
     res2 = run_sync_distributed(
-        spark, sync, InMemoryStore(), full_refresh=True, num_chunks=4,
-        cache_input_max_rows=0,
+        spark, sync, InMemoryStore(), full_refresh=True, num_chunks=1,
     )
     assert res2.stats.success == 5000
     assert n_cached() == before

@@ -9,7 +9,8 @@ import pytest
 from syncmaven_spark.runner import (
     ModelDefinition,
     SyncDefinition,
-    chunk_by_cursor_ranges,
+    plan_cursor_chunks,
+    run_sync,
     run_sync_distributed,
 )
 from syncmaven_spark.session import load_tables
@@ -46,7 +47,7 @@ def _sync(out_dir, cursor="event_id"):
 
 def test_chunk_ranges_cover_domain(spark, testdata):
     df = testdata["events"]
-    ranges = chunk_by_cursor_ranges(df, "event_id", 4)
+    ranges = plan_cursor_chunks(df, "event_id", 4)[0]
     assert ranges[0][0] is None and ranges[-1][1] is None
     # interior bounds ascend
     interior = [hi for _, hi in ranges[:-1]]
@@ -385,6 +386,10 @@ def test_distributed_foreach_revalidation_drops_counted(spark, tmp_path):
         enrichments=[_make_invalid_twin_enrichment()],
     )
     result = run_sync_distributed(spark, sync, InMemoryStore(), num_chunks=2)
+    assert result.stats.success == 20
+    assert result.stats.skipped == 20
+    # the parity runner keeps the same ledger (driver-side re-validation)
+    result = run_sync(spark, sync, InMemoryStore())
     assert result.stats.success == 20
     assert result.stats.skipped == 20
 

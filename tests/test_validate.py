@@ -8,7 +8,7 @@ from syncmaven_spark.validate import (
     ErrorThreshold,
     ErrorThresholdExceeded,
     RowValidator,
-    split_valid_invalid,
+    with_validation_column,
 )
 
 CONTACT_SCHEMA = {
@@ -83,7 +83,9 @@ def test_split_valid_invalid_dataframe(spark):
     df = spark.createDataFrame(
         [(1, "a@b.c"), (2, None), (3, "c@d.e")], ["external_id", "email"]
     )
-    valid, invalid = split_valid_invalid(df, CONTACT_SCHEMA)
+    tagged = with_validation_column(df, CONTACT_SCHEMA)
+    valid = tagged.filter("_valid").drop("_valid")
+    invalid = tagged.filter("NOT _valid").drop("_valid")
     assert sorted(r.external_id for r in valid.collect()) == [1, 3]
     assert [r.external_id for r in invalid.collect()] == [2]
 
